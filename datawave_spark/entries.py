@@ -2365,12 +2365,14 @@ SELECT event_id, user_id, value FROM events
 WHERE event_type = 'purchase' AND value > 300 AND NOT user_id = 5
 """)
 def q_index_driven(spark, sf_dir):
-    """RangeStream parity: candidate uids from the MATERIALIZED
-    inverted-index frame (sources.prepared.index_frame — the index is a
-    stored, field-partitioned + value-sorted asset, exactly as the
-    reference's shardIndex table is written at ingest; the query
-    measures lookup, not index construction), AND = index intersection,
-    NOT = anti join vs the universe, then fetch events — one Catalyst
+    """RangeStream parity over the MATERIALIZED inverted-index frame
+    (sources.prepared.index_frame — the index is a stored,
+    field-partitioned + value-sorted asset, exactly as the reference's
+    shardIndex table is written at ingest; the query measures lookup,
+    not index construction).  One pass: a single filtered scan of the
+    three terms' field partitions, one per-uid aggregation with a flag
+    per term, the AND / NOT tree evaluated over the flags, then a
+    left-semi fetch of the passing uids from events — one Catalyst
     plan."""
     from datawave_spark.sources.index_frame import index_query
     from datawave_spark.sources.prepared import index_frame

@@ -16,15 +16,23 @@ DataFrame:
 
     (field, value, uid, event_date)   one row per field VALUE per event
 
-and implements RangeStream over it: AND = inner join on uid (the
-sort-merge index intersection of AndIterator.java:34), OR = union +
-distinct (OrIterator.java:28), NOT = anti join against the universe
-(NegationFilter).  At 100 TB the index frame is written bucketed by
+and implements RangeStream over it in one pass: a single filtered scan
+keeps the index rows matching any leaf term, one ``groupBy(uid)`` turns
+them into a ``bool_or`` flag per leaf, and the query's boolean tree is
+evaluated over those flags — the Intersection (AND, AndIterator.java:34),
+Union (OR, OrIterator.java:28) and NegationFilter (NOT) stream merge as
+one aggregation rather than a join per term.  The events fetch is a
+left-semi join on the passing uids, or — when the tree also holds for a
+uid the index never saw (negation-rooted queries) — a left-anti join on
+the failing ones.  At 100 TB the index frame is written bucketed by
 ``value`` so term lookups prune, exactly as the reference's
 index-organized table does.
 """
 
 from __future__ import annotations
+
+import functools
+import operator
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -158,13 +166,6 @@ def _index_value_pred(node: CmpNode,
     raise ValueError(f"index lookup cannot serve op {node.op!r}")
 
 
-def _term_uids(index: DataFrame, node: CmpNode,
-               field_types: dict[str, str] | None) -> DataFrame:
-    pred = _index_value_pred(node, field_types)
-    return (index.filter((F.col("field") == node.field.name.upper()) & pred)
-            .select("uid").distinct())
-
-
 def _unindexed_terms(node: JexlNode, fields: set[str]) -> bool:
     """True when the subtree holds a comparison on a field the index
     does not cover — the fetch phase must then re-evaluate the full
@@ -178,68 +179,128 @@ def _unindexed_terms(node: JexlNode, fields: set[str]) -> bool:
     return True
 
 
-def candidate_uids(index: DataFrame, node: JexlNode,
-                   universe: DataFrame | None = None,
-                   field_types: dict[str, str] | None = None,
-                   fields: set[str] | None = None) -> DataFrame | None:
-    """RangeStream: AST → candidate uid frame, or None when the index
-    cannot serve the subtree.
-
-    AND → inner join (index intersection), OR → union+distinct (index
-    union), NOT → anti join vs the uid universe (context-required
-    branch — the reference marks these _Delayed_ and evaluates lazily;
-    with a universe frame we can resolve them in-plan).
+def _servable(node: JexlNode, fields: set[str], leaves: list):
+    """The part of ``node`` the index can serve, as a boolean tree over
+    leaf positions — ``("and"|"or", [kids])``, ``("not", kid)`` or an
+    int indexing ``leaves`` (appended in visit order) — or None when
+    the index cannot serve the subtree.
 
     A term on a field the index does not cover is UNSERVABLE (None) —
-    never an empty uid frame, which ANDed with an indexed term would
+    never an always-false leaf, which ANDed with an indexed term would
     wrongly empty the candidate set (the reference marks such terms
     evaluation-only instead; callers must re-evaluate the predicate
     over the fetched events).  Under AND the unservable term is simply
     skipped (siblings still narrow); under OR or NOT it taints the
-    whole subtree."""
-    if fields is None:
-        fields = {r.field for r in index.select("field").distinct().collect()}
+    whole subtree.  ``!=`` / ``!~`` are NOT of the positive term."""
     if isinstance(node, (CmpNode, RangeNode)):
         if node.field.name.upper() not in fields:
             return None           # evaluation-only: field not indexed
         if isinstance(node, CmpNode) and node.op in ("!=", "!~"):
             pos = CmpNode("==" if node.op == "!=" else "=~",
                           node.field, node.value)
-            return candidate_uids(index, NotNode(pos), universe,
-                                  field_types, fields)
-        return _term_uids(index, node, field_types)
+            return _servable(NotNode(pos), fields, leaves)
+        leaves.append(node)
+        return len(leaves) - 1
     if isinstance(node, AndNode):
-        out = None
-        for t in node.terms:
-            uids = candidate_uids(index, t, universe, field_types, fields)
-            if uids is None:
-                continue          # evaluation-only term: siblings narrow
-            out = uids if out is None else out.join(uids, "uid", "inner")
-        return out
+        kids = [k for k in (_servable(t, fields, leaves) for t in node.terms)
+                if k is not None]  # evaluation-only terms: siblings narrow
+        return ("and", kids) if kids else None
     if isinstance(node, OrNode):
-        out = None
+        mark, kids = len(leaves), []
         for t in node.terms:
-            uids = candidate_uids(index, t, universe, field_types, fields)
-            if uids is None:
-                return None       # an unservable OR branch taints the union
-            out = uids if out is None else out.union(uids)
-        return out.distinct()
+            k = _servable(t, fields, leaves)
+            if k is None:
+                del leaves[mark:]  # an unservable OR branch taints it
+                return None
+            kids.append(k)
+        return ("or", kids)
     if isinstance(node, NotNode):
-        if universe is None:
-            raise ValueError(
-                "negation needs a uid universe (context-required branch)")
         # An unindexed term ANYWHERE under the negation poisons it: the
-        # inner candidate set would be a SUPERSET of true inner matches
-        # (AND skips unindexed conjuncts), so universe-minus-superset
-        # UNDER-includes — and the fetch-phase re-evaluation cannot
-        # resurrect rows the anti-join already dropped.  Unservable.
+        # inner tree would be a SUPERSET of true inner matches (AND
+        # skips unindexed conjuncts), so its complement UNDER-includes
+        # — and the fetch-phase re-evaluation cannot resurrect rows the
+        # anti join already dropped.  Unservable.
         if _unindexed_terms(node.term, fields):
             return None
-        pos = candidate_uids(index, node.term, universe, field_types, fields)
-        if pos is None:
-            return None
-        return universe.select("uid").distinct().join(pos, "uid", "left_anti")
+        return ("not", _servable(node.term, fields, leaves))
     raise TypeError(f"index lookup cannot serve node {node!r}")
+
+
+def _fold(tree, leaf, neg):
+    """Evaluate a ``_servable`` tree: ``leaf(i)`` per leaf, ``&`` / ``|``
+    for AND / OR (Columns and bools alike), ``neg`` for NOT."""
+    if isinstance(tree, int):
+        return leaf(tree)
+    op, arg = tree
+    if op == "not":
+        return neg(_fold(arg, leaf, neg))
+    return functools.reduce(operator.and_ if op == "and" else operator.or_,
+                            [_fold(k, leaf, neg) for k in arg])
+
+
+def _resolve(index: DataFrame, node: JexlNode,
+             field_types: dict[str, str] | None, fields: set[str]):
+    """RangeStream in one pass: ``(verdicts, hit, absent_hit)`` or None
+    when the index cannot serve ``node``.
+
+    One filtered scan of the index keeps the rows matching ANY leaf;
+    one ``groupBy(uid)`` folds them to a ``bool_or`` column per leaf
+    (one column per leaf, so no leaf-count limit); ``hit`` is the
+    boolean tree over those columns — the Intersection / Union /
+    NegationFilter merge of RangeStream.java:377,425 as one
+    aggregation instead of a join per term.  ``absent_hit`` is the
+    tree's value for a uid with NO matching index row (every leaf
+    false): False → the passing uids are exactly the ``hit`` groups;
+    True (negation-rooted) → every uid passes except the ``~hit``
+    groups."""
+    leaves: list = []
+    tree = _servable(node, fields, leaves)
+    if tree is None:
+        return None
+    field = F.col("field")
+    flags = [(field == leaf.field.name.upper())
+             & _index_value_pred(leaf, field_types) for leaf in leaves]
+    # the explicit IS NOT NULL keeps the isnotnull(field) partition
+    # filter a field-partitioned stored index prunes on
+    scan = index.filter(
+        field.isNotNull()
+        & field.isin(sorted({leaf.field.name.upper() for leaf in leaves}))
+        & functools.reduce(operator.or_, flags))
+    verdicts = scan.groupBy("uid").agg(
+        *[F.bool_or(f).alias(f"__leaf{i}") for i, f in enumerate(flags)])
+    hit = _fold(tree, lambda i: F.coalesce(F.col(f"__leaf{i}"),
+                                           F.lit(False)), operator.inv)
+    absent_hit = _fold(tree, lambda i: False, operator.not_)
+    return verdicts, hit, absent_hit
+
+
+def candidate_uids(index: DataFrame, node: JexlNode,
+                   universe: DataFrame | None = None,
+                   field_types: dict[str, str] | None = None,
+                   fields: set[str] | None = None) -> DataFrame | None:
+    """RangeStream: AST → candidate uid frame, or None when the index
+    cannot serve the query (see ``_servable`` for which terms are
+    evaluation-only).
+
+    The boolean tree is evaluated over ONE per-uid aggregation of the
+    index (``_resolve``).  When the tree is false for a uid absent from
+    the index, the candidates are the uids whose groups pass.  A
+    negation-rooted tree also passes every uid the index never saw, so
+    it needs the ``universe`` frame (a ``uid`` column): the candidates
+    are the universe minus the failing groups."""
+    if fields is None:
+        fields = {r.field for r in index.select("field").distinct().collect()}
+    resolved = _resolve(index, node, field_types, fields)
+    if resolved is None:
+        return None
+    verdicts, hit, absent_hit = resolved
+    if not absent_hit:
+        return verdicts.filter(hit).select("uid")
+    if universe is None:
+        raise ValueError(
+            "negation needs a uid universe (context-required branch)")
+    return (universe.select("uid").distinct()
+            .join(verdicts.filter(~hit), "uid", "left_anti"))
 
 
 def index_query(events: DataFrame, index: DataFrame, jexl: str,
@@ -249,22 +310,29 @@ def index_query(events: DataFrame, index: DataFrame, jexl: str,
                 shard_range: tuple | None = None,
                 date_col: str | None = None,
                 event_date_col: str | None = None) -> DataFrame:
-    """Full index-driven query: candidate uids from the index frame,
-    then fetch + (re)evaluate against the events — the two-phase
-    index-then-evaluate shape of QueryIterator, as one Catalyst plan.
+    """Full index-driven query: per-uid verdicts from one aggregation
+    over the index frame, then fetch + (re)evaluate against the events
+    — the two-phase index-then-evaluate shape of QueryIterator, as one
+    Catalyst plan.  The fetch takes one of two branches:
+
+    - the tree is false for a uid with no index row (an AND-anchored
+      query): a left-semi join on the uids that pass;
+    - otherwise (negation-rooted): a left-anti join of the non-null-id
+      events on the uids that fail — no distinct over the uid universe.
+
     Terms on unindexed fields never touch the index (evaluation-only):
-    the semi-join narrows by the indexed siblings and the full JEXL
-    predicate re-evaluates over the fetched rows; a query with no
-    index-servable conjunct falls back to the full predicate scan.
-    ``fields``: pass the indexed-field set when known (ingest config /
-    cached metadata) to skip the per-plan distinct job.
+    the indexed siblings narrow and the full JEXL predicate
+    re-evaluates over the fetched rows; a query with no index-servable
+    conjunct falls back to the full predicate scan.  ``fields``: pass
+    the indexed-field set when known (ingest config / cached metadata)
+    to skip the per-plan distinct job.
 
     ``shard_range=(lo, hi)`` + ``date_col``: the query's begin/end
     dates bound the SHARDS consulted (RangeStream.java:377-513 —
     the reference never scans index rows outside the query's date
     range).  The bound applies to the index's ``event_date`` column
-    AND to the events fetch via ``date_col``, keeping the uid universe
-    consistent for negations.  On an index stored hive-partitioned by
+    AND to the events fetch via ``date_col``, so negations never pass
+    an out-of-range event.  On an index stored hive-partitioned by
     (field, event_date) — ``prepared``'s layout for the scale path —
     this is literal partition pruning: the scan never opens
     out-of-range files.
@@ -300,12 +368,19 @@ def index_query(events: DataFrame, index: DataFrame, jexl: str,
                 F.col(date_col).cast("date").between(lo, hi))
     if fields is None:
         fields = {r.field for r in index.select("field").distinct().collect()}
-    universe = events.select(F.col(id_col).cast("string").alias("uid"))
-    cands = candidate_uids(index, node, universe, field_types, fields)
-    if cands is None:
+    resolved = _resolve(index, node, field_types, fields)
+    if resolved is None:
         return compile_query(events, jexl, field_types=field_types)
+    verdicts, hit, absent_hit = resolved
+    if absent_hit:
+        # a null id matches no index group, and the semi-join branch
+        # never returns it either — drop it before the anti join
+        events = events.filter(F.col(id_col).isNotNull())
+        uids, how = verdicts.filter(~hit).select("uid"), "left_anti"
+    else:
+        uids, how = verdicts.filter(hit).select("uid"), "left_semi"
     fetched = events.join(
-        cands, events[id_col].cast("string") == cands["uid"], "left_semi")
+        uids, events[id_col].cast("string") == uids["uid"], how)
     if _unindexed_terms(node, fields):
         fetched = compile_query(fetched, jexl, field_types=field_types)
     return fetched

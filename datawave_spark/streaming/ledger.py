@@ -197,9 +197,8 @@ def load_bloom(ledger_path: str) -> dict | None:
 # leaves reclamation to driver GC / ContextCleaner — tight-interval
 # queries accumulate broadcast blocks on driver and executors.  Keyed
 # by the bits dir's commit fingerprint (file list + mtimes), so a
-# compaction that rolls the sidecar replaces — and destroys — the
-# superseded broadcast; the old one's consumers are synchronous
-# foreachBatch actions that completed before the roll.
+# compaction that rolls the sidecar replaces — and unpersists — the
+# superseded broadcast.
 _BLOOM_BC_CACHE: dict[str, tuple] = {}
 
 
@@ -225,8 +224,11 @@ def _bits_broadcast(spark: SparkSession, bits_path: str, m: int):
     bc = spark.sparkContext.broadcast(words)
     _BLOOM_BC_CACHE[bits_path] = (fp, bc)
     if hit is not None:
+        # unpersist, not destroy: a frame split before the roll still
+        # holds the old broadcast and must keep evaluating — unpersist
+        # only drops the executor copies, which re-fetch on use
         try:
-            hit[1].destroy()
+            hit[1].unpersist(blocking=False)
         except Exception:
             pass
     return bc

@@ -103,8 +103,15 @@ def standing_query_push(spark: SparkSession, input_path: str,
         # scan + transform — locally that is noise, at real batch
         # volumes it is the batch cost times the action count (the
         # same discipline as stream_ingest's validation split).
-        # Result-sized, dropped in the finally.
+        # Result-sized, dropped in the finally — which covers every
+        # failure after the persist, not only the feed/ledger writes.
         results = transform(batch_df).persist()
+        try:
+            _deliver(results, epoch_id)
+        finally:
+            results.unpersist(blocking=False)
+
+    def _deliver(results: DataFrame, epoch_id: int) -> None:
         # EXPLICIT ledger schema: schema inference over a ledger dir
         # that a crashed epoch left with only _temporary/_SUCCESS
         # throws the same AnalysisException as a missing path — and
@@ -217,7 +224,6 @@ def standing_query_push(spark: SparkSession, input_path: str,
             new.select(*key_cols).write.mode("append").parquet(ledger_path)
         finally:
             new.unpersist(blocking=False)
-            results.unpersist(blocking=False)
 
     writer = (raw.writeStream.foreachBatch(push_batch)
               .option("checkpointLocation", checkpoint_path))

@@ -82,12 +82,15 @@ def local_frame(spark, rows, schema: str):
     frame at local[32].  Routing the same rows through pandas + Arrow
     ships columnar batches that deserialize JVM-side: no Python
     workers at execution, identical rows.  Falls back to the classic
-    path on any conversion error (exotic cell types)."""
+    path on any conversion error (exotic cell types).  ``rows`` may be
+    any iterable: it is materialized once, so the fallback still sees
+    every row of a generator the Arrow attempt already drained."""
+    rows = list(rows)
     try:
         import pandas as pd
         from pyspark.sql.types import _parse_datatype_string
         st = _parse_datatype_string(schema)
-        pdf = pd.DataFrame(list(rows), columns=st.fieldNames())
+        pdf = pd.DataFrame(rows, columns=st.fieldNames())
         return spark.createDataFrame(pdf, schema=st)
     except Exception:
         return spark.createDataFrame(rows, schema)

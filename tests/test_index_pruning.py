@@ -135,3 +135,58 @@ class TestDatelessIndexShardRange:
         want = sorted(r.event_id
                       for r in expect.select("event_id").collect())
         assert got == want and len(got) > 0
+
+
+def _plan_nodes(df) -> list[str]:
+    """Physical operator names of ``df``'s executed plan, one per line."""
+    import re
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [m.group(1) for m in
+            (re.match(r"^[\s:|+\-*]*(\w+)", ln) for ln in plan.splitlines())
+            if m]
+
+
+ONE_PASS_QUERIES = {
+    "2-leaf": "EVENT_TYPE == 'click' && VALUE > 100",
+    "5-leaf": "EVENT_TYPE == 'click' && VALUE > 100 && USER_ID < 10 "
+              "&& !(USER_ID == 3) && VALUE < 300",
+    "12-leaf": "(EVENT_TYPE == 'click' || EVENT_TYPE == 'view' "
+               "|| EVENT_TYPE == 'error') && (USER_ID == 1 || USER_ID == 2 "
+               "|| USER_ID == 3 || USER_ID == 4 || USER_ID == 5) "
+               "&& VALUE > 10 && VALUE < 320 && !(USER_ID == 9) "
+               "&& !(EVENT_TYPE =~ 'sig.*')",
+    "negation-rooted": "!(EVENT_TYPE == 'click') || VALUE > 300",
+}
+
+
+class TestOnePassPlanShape:
+    """RangeStream in one pass: whatever the leaf count, an all-indexed
+    query's plan is ONE shuffle aggregation over the index (a partial +
+    final aggregate pair) and ONE join — the events fetch — instead of
+    a distinct per term and a join per AND/NOT."""
+
+    @pytest.fixture(scope="class")
+    def indexed(self, tables):
+        ev = tables["events"]
+        ft = {"VALUE": "number", "USER_ID": "number"}
+        idx = build_index(ev, ["event_type", "value", "user_id"],
+                          "event_id", field_types=ft)
+        return ev, idx, ft
+
+    @pytest.mark.parametrize("name", list(ONE_PASS_QUERIES))
+    def test_one_aggregate_one_join(self, indexed, name):
+        from datawave_spark.compiler import compile_query
+        ev, idx, ft = indexed
+        q = ONE_PASS_QUERIES[name]
+        served = index_query(ev, idx, q, "event_id", field_types=ft,
+                             fields={"EVENT_TYPE", "VALUE", "USER_ID"})
+        nodes = _plan_nodes(served)
+        aggs = [n for n in nodes if n.endswith("Aggregate")]
+        joins = [n for n in nodes
+                 if n.endswith("Join") or n == "CartesianProduct"]
+        assert len(aggs) == 2 and len(joins) == 1, nodes
+        want = compile_query(ev, q, field_types=ft)
+        got = sorted(r.event_id for r in served.select("event_id").collect())
+        assert got == sorted(r.event_id
+                             for r in want.select("event_id").collect())
+        assert got

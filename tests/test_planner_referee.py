@@ -197,3 +197,37 @@ class TestCappedPathEquivalence:
                 mismatches.append((q, want, got))
         cidx.unpersist()
         assert not mismatches, mismatches[:5]
+
+
+class TestNullIdParity:
+    """A null-id event matches no index group: neither fetch branch —
+    the left-semi join of an AND-anchored query nor the left-anti join
+    of a negation-rooted one — may return it, even when its values
+    satisfy the predicate."""
+
+    @pytest.fixture(scope="class")
+    def with_null_id(self, spark):
+        rows = ROWS + [(None, "a", ["x"], "10", 1.0, "2024-01-05")]
+        df = spark.createDataFrame(rows, SCHEMA).cache()
+        df.count()
+        idx = build_index(df, ["S", "A", "N", "D"], "uid",
+                          field_types=FT).cache()
+        yield df, idx
+        idx.unpersist()
+        df.unpersist()
+
+    @pytest.mark.parametrize("q, join", [
+        ('S == "a" && N == 10', "LeftSemi"),
+        ('!(S == "B")', "LeftAnti"),
+    ], ids=["and-anchored", "negation-rooted"])
+    def test_null_id_never_fetched(self, with_null_id, q, join):
+        df, idx = with_null_id
+        out = index_query(df, idx, q, "uid", field_types=FT,
+                          fields={"S", "A", "N", "D"})
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert join in plan
+        got = [r.uid for r in out.select("uid").collect()]
+        want = [r.uid for r in compile_query(df, q, field_types=FT)
+                .select("uid").collect()]
+        assert None in want and None not in got
+        assert sorted(got) == sorted(u for u in want if u is not None)

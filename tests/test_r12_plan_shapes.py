@@ -49,6 +49,24 @@ class TestLocalFrame:
         want = sorted(spark.createDataFrame(rows, schema).collect())
         assert got == want
 
+    def test_generator_survives_arrow_failure(self, spark, monkeypatch):
+        """The classic-path fallback must see every row even when the
+        input is a generator the failed Arrow attempt already read."""
+        import pandas as pd
+        from datawave_spark.util import local_frame
+        real = spark.createDataFrame
+
+        def arrow_fails(data, schema=None):
+            if isinstance(data, pd.DataFrame):
+                raise TypeError("injected Arrow conversion failure")
+            return real(data, schema)
+
+        monkeypatch.setattr(spark, "createDataFrame", arrow_fails)
+        rows = ((i, str(i)) for i in range(5))
+        got = sorted(local_frame(spark, rows, "id bigint, name string")
+                     .collect())
+        assert [tuple(r) for r in got] == [(i, str(i)) for i in range(5)]
+
     def test_empty_rows(self, spark):
         from datawave_spark.util import local_frame
         out = local_frame(spark, [], "id bigint")

@@ -259,3 +259,71 @@ class TestLedgerCompaction:
         with pytest.raises(StreamingQueryException,
                            match="refusing to re-deliver"):
             self._push_once(spark, src, feed, ledger, ckpt)
+
+    def test_failed_batch_releases_persisted_results(self, spark, tmp_path,
+                                                     monkeypatch):
+        """Failure injection: an error raised after ``results`` is
+        persisted and materialized, but before the feed/ledger writes,
+        must still unpersist it — no cached frame or persisted RDD
+        survives the failed batch."""
+        from pyspark.sql.streaming import StreamingQueryException
+        from pyspark.storagelevel import StorageLevel
+        from datawave_spark.streaming import ledger as _ledger
+        src = str(tmp_path / "xsrc")
+        self._write(spark, src, "f1", [(1, "click", 1.0)])
+        feed, ledger, ckpt = (str(tmp_path / d) for d in
+                              ("xfeed", "xledger", "xckpt"))
+        self._push_once(spark, src, feed, ledger, ckpt)
+        _ledger.compact_ledger(spark, ledger, ["event_id"], bloom_fpp=0.01)
+        self._write(spark, src, "f2", [(2, "click", 2.0)])
+
+        def failing_split(spark_, results, meta):
+            results.count()                 # materialize the cache
+            raise RuntimeError("injected split failure")
+
+        monkeypatch.setattr(_ledger, "split_by_bloom", failing_split)
+        jsc = spark.sparkContext._jsc
+        before = set(jsc.getPersistentRDDs().keys())
+        seen = []
+
+        def standing(batch):
+            out = batch.filter(F.col("event_type") == "click") \
+                .select("event_id", "value")
+            seen.append(out)
+            return out
+
+        sch = spark.read.parquet(os.path.join(src, "f1.parquet")).schema
+        q = standing_query_push(
+            spark, src, sch, standing, ["event_id"], feed, ledger, ckpt,
+            options={"maxFilesPerTrigger": "1",
+                     "recursiveFileLookup": "true"})
+        with pytest.raises(StreamingQueryException,
+                           match="injected split failure"):
+            q.awaitTermination()
+        assert seen and all(df.storageLevel == StorageLevel.NONE
+                            for df in seen)
+        assert set(jsc.getPersistentRDDs().keys()) <= before
+
+    def test_split_frame_survives_sidecar_roll(self, spark, tmp_path):
+        """A split built before a compaction rolls the sidecar holds the
+        superseded bits broadcast; the roll must not destroy it."""
+        from datawave_spark.streaming.ledger import (
+            compact_ledger, load_bloom, split_by_bloom)
+        ledger = str(tmp_path / "rledger")
+        spark.createDataFrame([(i,) for i in range(100)], "event_id long") \
+            .write.mode("overwrite").parquet(ledger)
+        compact_ledger(spark, ledger, ["event_id"], bloom_fpp=0.01)
+        batch = spark.createDataFrame([(i,) for i in range(50, 150)],
+                                      "event_id long")
+        maybe, fresh = split_by_bloom(spark, batch, load_bloom(ledger))
+        # roll: new keys + recompaction rewrite the bits, and the next
+        # split re-broadcasts them, superseding the old broadcast
+        spark.createDataFrame([(i,) for i in range(100, 120)],
+                              "event_id long") \
+            .write.mode("append").parquet(ledger)
+        compact_ledger(spark, ledger, ["event_id"], bloom_fpp=0.01)
+        split_by_bloom(spark, batch, load_bloom(ledger))[0].count()
+        maybe_ids = {r.event_id for r in maybe.collect()}
+        fresh_ids = {r.event_id for r in fresh.collect()}
+        assert set(range(50, 100)) <= maybe_ids
+        assert maybe_ids | fresh_ids == set(range(50, 150))
