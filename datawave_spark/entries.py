@@ -15,7 +15,6 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -24,7 +23,7 @@ from datawave_spark.operators import dedup, similarity, text as text_ops
 from datawave_spark.operators.discovery import discovery, facets
 from datawave_spark.operators.grouping import group_by
 from datawave_spark.operators.unique import unique, unique_tuples
-from datawave_spark.util import spread as _spread
+from datawave_spark.util import shuffle_width, spread as _spread
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -1585,14 +1584,10 @@ def q_streaming_stateful_dedup(spark, sf_dir):
     out = streaming_unique(keyed, ["user_id", "event_type"])
     _STREAM_SEQ[0] += 1
     name = f"stream_sd_{_STREAM_SEQ[0]}"
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with shuffle_width(spark, 8):
         q = (out.writeStream.format("memory").queryName(name)
              .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    q.awaitTermination()
     return spark.table(name).select("user_id", "event_type")
 
 
@@ -3549,24 +3544,14 @@ def q_multimodal_frame_sample(spark, sf_dir):
 
 # ------------------------------------- §2.7 streaming (driver-visible)
 
+# One-shot local streams start under ``shuffle_width(spark, 8)``:
+# every stateful operator commits one state store PER shuffle partition
+# PER micro-batch, so 32 partitions pay 32 store commits for kilobytes
+# of state (measured 1.9s -> 1.2s per stream at sf0.1).  A streaming
+# query fixes its conf at ``start()``, so only the start runs inside
+# the scope; on a real cluster the state width stays the session
+# default, sized to executor count.
 _STREAM_SEQ = [0]
-
-
-@contextmanager
-def _stream_partitions(spark, n: int = 8):
-    """Scope ``spark.sql.shuffle.partitions`` down for a one-shot
-    local stream: every stateful operator commits one state store PER
-    shuffle partition PER micro-batch, so 32 partitions pay 32 store
-    commits for kilobytes of state (measured 1.9s -> 1.2s per stream
-    at sf0.1).  On a real cluster this knob sizes state parallelism to
-    executor count and stays at the session default — the override is
-    restored on exit either way."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 @register("streaming_window_counts", f"""
@@ -3603,10 +3588,10 @@ def q_streaming_window_counts(spark, sf_dir):
                 F.round(F.sum("value"), 4).alias("sum_value")))
     _STREAM_SEQ[0] += 1
     name = f"stream_wc_{_STREAM_SEQ[0]}"
-    with _stream_partitions(spark):
+    with shuffle_width(spark, 8):
         q = (agg.writeStream.format("memory").queryName(name)
              .outputMode("complete").trigger(availableNow=True).start())
-        q.awaitTermination()
+    q.awaitTermination()
     return spark.table(name).select(
         F.date_format(F.col("window.start"), _TS_FMT).alias("window_start"),
         "event_type", "n", "sum_value")
@@ -3654,14 +3639,10 @@ def q_streaming_interval_join(spark, sf_dir):
     # empty-partition fixed cost dominates when partitions ≫ state.
     # Size state partitions down for the join (5x measured; on a real
     # cluster this is sized to key cardinality / executor count).
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with shuffle_width(spark, 8):
         q = (j.writeStream.format("memory").queryName(name)
              .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    q.awaitTermination()
     return spark.table(name).select("click_id", "buy_id")
 
 
@@ -4000,10 +3981,10 @@ def q_streaming_session_windows(spark, sf_dir):
                 F.round(F.sum("value"), 4).alias("sum_value")))
     _STREAM_SEQ[0] += 1
     name = f"stream_sess_{_STREAM_SEQ[0]}"
-    with _stream_partitions(spark):
+    with shuffle_width(spark, 8):
         q = (agg.writeStream.format("memory").queryName(name)
              .outputMode("complete").trigger(availableNow=True).start())
-        q.awaitTermination()
+    q.awaitTermination()
     return spark.table(name).select(
         "user_id",
         F.date_format(F.col("session_window.start"), _TS_FMT)
@@ -4598,14 +4579,10 @@ def q_streaming_dedup_watermark(spark, sf_dir):
         .select("event_id", "event_type")
     _STREAM_SEQ[0] += 1
     name = f"stream_wm_{_STREAM_SEQ[0]}"
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with shuffle_width(spark, 8):
         q = (out.writeStream.format("memory").queryName(name)
              .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    q.awaitTermination()
     return spark.table(name)
 
 
@@ -6110,8 +6087,7 @@ def q_streaming_push_results(spark, sf_dir):
 
     q = standing_query_push(
         spark, sf_dir, sch, standing, ["event_id"], feed, ledger, ckpt,
-        options={"pathGlobFilter": "events.parquet"},
-        batch_shuffle_partitions=8)
+        options={"pathGlobFilter": "events.parquet"})
     q.awaitTermination()
     return spark.read.parquet(feed).select("event_id", "user_id", "value")
 
@@ -6164,9 +6140,7 @@ def q_push_ledger_compaction(spark, sf_dir):
     def run():
         standing_query_push(
             spark, src, sch, standing, ["event_id"], feed, ledger,
-            ckpt, options={"maxFilesPerTrigger": "1"},
-            batch_shuffle_partitions=8) \
-            .awaitTermination()
+            ckpt, options={"maxFilesPerTrigger": "1"}).awaitTermination()
 
     run()                                        # epoch 1
     compact_ledger(spark, ledger, ["event_id"], bloom_fpp=0.01)

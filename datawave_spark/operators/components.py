@@ -21,7 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from datawave_spark.util import graph_partitions, iter_checkpoint, local_frame
+from datawave_spark.util import (
+    graph_partitions, iter_checkpoint, local_frame, shuffle_width)
 
 
 def connected_components(pairs: DataFrame, max_iter: int = 15,
@@ -246,7 +247,13 @@ def pagerank(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
     round — exponential driver time by round 10 — while the
     checkpoint truncates lineage outright.  Fixed ``iters`` (no
     convergence collect): deterministic plan count, and 10 rounds is
-    standard for ranking stability."""
+    standard for ranking stability.
+
+    The session shuffle width is narrowed to the graph size for the
+    whole call (``util.shuffle_width``), so for the duration of the
+    call concurrent queries on the same session also plan at the
+    narrowed width; the previous width is restored on return or
+    raise."""
     from datawave_spark.util import _num_partitions
     e0 = (edges.select(F.col(src_col).cast("string").alias("src"),
                        F.col(dst_col).cast("string").alias("dst"))
@@ -266,9 +273,7 @@ def pagerank(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
     # returned frame.  parts derives from the data (graph_partitions),
     # not the local core count — a billion-edge graph keeps full
     # cluster width.
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    try:
+    with shuffle_width(spark, parts):
         # eager-checkpoint the sized edge frame so the pre-repartition
         # cache entry can be dropped NOW (rebinding the name would
         # otherwise strand it in the CacheManager for the session)
@@ -292,6 +297,4 @@ def pagerank(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
                 reliable)
         nodes.unpersist(blocking=False)
         deg.unpersist(blocking=False)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     return ranks

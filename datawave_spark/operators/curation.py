@@ -453,19 +453,18 @@ def dsir_topk(df: DataFrame, target: DataFrame, text_col: str,
     log-ratio is computed once in the vocab-sized table, and the token
     explosion joins that ONE broadcast table.  Same arithmetic on the
     same inputs — bit-identical scores."""
-    from datawave_spark.operators.dedup import _persist_scoped
     from datawave_spark.operators.text import tokens
-    from datawave_spark.util import spread
+    from datawave_spark.util import persist_scoped, spread
     ex = spread(df, sized=True).select(F.col(id_col).alias("id"),
                            F.explode(tokens(F.col(text_col))).alias("token"))
-    cnt = _persist_scoped(
+    cnt = persist_scoped(
         ex.groupBy("token").agg(F.count(F.lit(1)).alias("nc")),
         "curation.dsir.corpus_lm")
     tot = cnt.agg(F.sum("nc").cast("double").alias("tc"),
                   F.count(F.lit(1)).cast("double").alias("v"))
     tex = spread(target, sized=True).select(
         F.explode(tokens(F.col(text_col))).alias("token"))
-    tcnt = _persist_scoped(
+    tcnt = persist_scoped(
         tex.groupBy("token").agg(F.count(F.lit(1)).alias("nt")),
         "curation.dsir.target_lm")
     ttot = tcnt.agg(F.coalesce(F.sum("nt"), F.lit(0))

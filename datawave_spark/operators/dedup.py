@@ -44,91 +44,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from datawave_spark.util import spread
+from datawave_spark.util import persist_scoped, spread
 
 TOKEN_RE = "[^a-z0-9]+"
-
-# Lineage-barrier caches, scoped per call site: each new call through
-# _persist_scoped unpersists the PREVIOUS frame registered under the
-# same key, so repeated invocations (bench loops, incremental runs)
-# hold at most one cached signature frame per operator instead of
-# accumulating them for the session lifetime.  The registry is
-# lock-guarded so concurrent callers cannot interleave get/persist/
-# store and strand an unowned persisted frame; note that under true
-# concurrency the replaced frame may be unpersisted while another
-# caller's job still reads it — Spark then recomputes those partitions
-# (correct, just uncached), so concurrent same-operator runs lose the
-# cache benefit, never correctness.
-import threading as _threading
-
-_SCOPED_CACHE: dict[str, DataFrame] = {}
-_SCOPED_LOCK = _threading.Lock()
-
-
-def _persist_scoped(df: DataFrame, key: str) -> DataFrame:
-    out = df.persist()
-    with _SCOPED_LOCK:
-        prev = _SCOPED_CACHE.get(key)
-        _SCOPED_CACHE[key] = out
-    if prev is not None and prev is not out:
-        # Spark uncaches by canonicalized-plan equality, and a REBUILD of
-        # the same query yields a plan identical to the previous build's —
-        # unpersisting prev would also evict the entry just registered for
-        # out (the cache then silently disappears on every same-session
-        # rebuild: bench repeats, test-suite order).  Only evict frames
-        # whose plan genuinely differs from the one we just persisted.
-        try:
-            same = prev.sameSemantics(out)
-        except Exception:
-            same = False            # cross-session compare may fail
-        if not same:
-            try:
-                prev.unpersist(blocking=False)
-            except Exception:
-                pass                # session of prev may be stopped
-    return out
-
-
-_SCOPED_SEQ: dict[str, list] = {}
-
-
-def _persist_scoped_seq(df: DataFrame, namespace: str,
-                        keep: int = 4) -> DataFrame:
-    """Like ``_persist_scoped`` but each CALL gets its own cache slot,
-    bounded FIFO per namespace.  For operators whose results are
-    composed LAZILY (two short-circuit composites unioned before
-    collect, two ssdeep joins materialized together), a single shared
-    key would let the second call evict the first call's cache before
-    the caller ever materializes it — recomputing exactly the work the
-    persist exists to avoid.  A per-call slot keeps both alive; the
-    ``keep`` bound still prevents session-lifetime accumulation
-    (evicting the OLDEST slot, which by then is materialized or
-    abandoned — an evicted frame that is still referenced just
-    recomputes, never breaks)."""
-    out = df.persist()
-    evict = None
-    keep_alive = []
-    with _SCOPED_LOCK:
-        slots = _SCOPED_SEQ.setdefault(namespace, [])
-        slots.append(out)
-        if len(slots) > keep:
-            evict = slots.pop(0)
-        keep_alive = list(slots)
-    if evict is not None and evict is not out:
-        # Same canonicalized-plan caveat as _persist_scoped: unpersisting
-        # the evicted frame would also uncache any LIVE slot with an
-        # identical plan (rebuilds of the same query land identical
-        # plans).  Only evict when no surviving slot shares its plan.
-        try:
-            shared = any(evict.sameSemantics(s) for s in keep_alive)
-        except Exception:
-            shared = False          # cross-session compare may fail
-        if not shared:
-            try:
-                evict.unpersist(blocking=False)
-            except Exception:
-                pass                # session of evict may be stopped
-    return out
 
 
 def _tokens(col) -> Column:
@@ -147,7 +65,7 @@ def shingles(df: DataFrame, text_col: str, id_col: str, k: int = 3) -> DataFrame
     column data — O(k) per gram — with no shuffle at all (the previous
     formulation paid a posexplode + groupBy round-trip for the same
     barrier)."""
-    arr = _persist_scoped(
+    arr = persist_scoped(
         spread(df).select(F.col(id_col).alias("id"),
                           _tokens(F.col(text_col)).alias("toks")),
         "shingles")
@@ -445,8 +363,8 @@ def simhash_hamming_pairs(df: DataFrame, text_col: str, id_col: str,
     # and once per self-join side — persist is the lineage barrier
     # (same reason shingles() persists its token arrays); scoped so
     # repeated calls don't accumulate cached copies
-    sig = _persist_scoped(simhash_signatures(df, text_col, id_col, bits),
-                          "simhash_hamming_pairs")
+    sig = persist_scoped(simhash_signatures(df, text_col, id_col, bits),
+                         "simhash_hamming_pairs")
     base = bits // n_blocks
     bounds = []
     start = 1
@@ -474,7 +392,7 @@ def simhash_hamming_pairs(df: DataFrame, text_col: str, id_col: str,
     # signatures (r11 plan: the Generate/HashAggregate/BroadcastHashJoin
     # subtree appeared once per join side).  (id, block, val, __int) is
     # n_blocks rows per document — corpus-sized, never pair-sized.
-    b = _persist_scoped(b, "simhash_hamming_pairs_blocks")
+    b = persist_scoped(b, "simhash_hamming_pairs_blocks")
     left = b.select(F.col("id").alias("id_a"),
                     F.col("__int").alias("__ia"), "block", "val")
     right = b.select(F.col("id").alias("id_b"),
@@ -521,8 +439,8 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
     Uid.List cardinality cap (GlobalIndexUidAggregator.java:25) guard
     against.  Always set it at corpus scale.
     """
-    sh = _persist_scoped(shingles(df, text_col, id_col, k),
-                         "ngram_jaccard_pairs.sh")
+    sh = persist_scoped(shingles(df, text_col, id_col, k),
+                        "ngram_jaccard_pairs.sh")
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
     return _ngram_jaccard_core(sh, sizes, threshold, prefix_filter,
                                max_df=max_df)
@@ -821,7 +739,7 @@ def exact_substring_dedup(df: DataFrame, text_col: str = "text",
     # md5 over the whole corpus (guide §8.1: materialize the
     # fingerprint pass; the frame is 3 narrow columns per window, the
     # text itself never enters it).
-    w = _persist_scoped(
+    w = persist_scoped(
         base.select("doc_id", "toks", F.explode(starts).alias("start"))
             .select("doc_id", "start",
                     F.md5(F.concat_ws(

@@ -211,11 +211,11 @@ def ssdeep_similarity_join(queries: DataFrame, targets: DataFrame,
     # three short strings, far smaller than whatever produced them.
     # Per-call cache slots (bounded FIFO): two similarity joins
     # composed lazily (e.g. unioned) keep both parses cached.
-    from datawave_spark.operators.dedup import _persist_scoped_seq
-    pq = _persist_scoped_seq(
-        parse_hashes(queries, hash_col, id_col, max_repeated), "ssdeep.parse")
-    pt = _persist_scoped_seq(
-        parse_hashes(targets, hash_col, id_col, max_repeated), "ssdeep.parse")
+    from datawave_spark.util import persist_scoped
+    pq = persist_scoped(parse_hashes(queries, hash_col, id_col, max_repeated),
+                        "ssdeep.parse", keep=4)
+    pt = persist_scoped(parse_hashes(targets, hash_col, id_col, max_repeated),
+                        "ssdeep.parse", keep=4)
     qn = hash_ngrams(pq, ngram_size, min_hash_size) \
         .withColumnRenamed("id", "query_id")
     tn = hash_ngrams(pt, ngram_size, min_hash_size) \
@@ -278,12 +278,12 @@ def ssdeep_chained_discovery(queries: DataFrame, corpus: DataFrame,
     # running the full similarity join would drag every candidate pair
     # through the two scoring joins (parsed query + parsed target)
     # whose outputs are thrown away
-    from datawave_spark.operators.dedup import _persist_scoped_seq
+    from datawave_spark.util import persist_scoped
     pq = parse_hashes(queries, hash_col, id_col, max_repeated)
     # the corpus parse feeds both the ngram branch and the cap-sizes
     # branch — persist so an expensive upstream runs once; per-call
     # slot so lazily-composed chained lookups keep both caches
-    pt = _persist_scoped_seq(
+    pt = persist_scoped(
         parse_hashes(corpus, hash_col, id_col, max_repeated),
         "ssdeep.chained", keep=2)
     qn = hash_ngrams(pq).withColumnRenamed("id", "query_id")

@@ -93,9 +93,9 @@ def composite_query(logics: dict[str, Callable[[], DataFrame]],
         # lazily-composed winners don't evict each other before the
         # caller materializes them) and the FIFO bound still releases
         # old winners, never a session-lifetime accumulation.
-        from datawave_spark.operators.dedup import _persist_scoped_seq
+        from datawave_spark.util import persist_scoped
         for df in frames:
-            p = _persist_scoped_seq(df, "composite.short_circuit")
+            p = persist_scoped(df, "composite.short_circuit", keep=4)
             if p.limit(1).count() > 0:
                 return p
             p.unpersist(blocking=False)

@@ -89,8 +89,11 @@ def read_evolving(spark: SparkSession, root: str) -> DataFrame:
     ``_EVOLVED_SCHEMA_MEMO``)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    # an unlistable root, or one the walk sees no parquet under (a
+    # ``file://`` URI, an object-store path), is un-fingerprintable:
+    # memoizing under an empty listing would pin the schema forever
     try:
-        fp = _dir_fingerprint(root)
+        fp = _dir_fingerprint(root) or None
     except OSError:
         fp = None
     hit = _EVOLVED_SCHEMA_MEMO.get(root)

@@ -59,8 +59,7 @@ def standing_query_push(spark: SparkSession, input_path: str,
                         options: dict[str, str] | None = None,
                         sink: Callable[[DataFrame, int], None]
                         | None = None,
-                        append_partitions: int = 1,
-                        batch_shuffle_partitions: int | None = None
+                        append_partitions: int = 1
                         ) -> StreamingQuery:
     """Run ``transform`` as a standing query over arriving input and
     push each result row exactly once (per the ledger) to the feed.
@@ -69,34 +68,16 @@ def standing_query_push(spark: SparkSession, input_path: str,
     the websocket side of the analog — called with ONLY the
     not-yet-delivered rows of each batch, after the feed append (so a
     socket consumer and the feed agree).  ``key_cols`` identify a
-    result row for dedup across batches.
-
-    ``batch_shuffle_partitions`` scopes the shuffle width of the
-    in-batch plans (the dropDuplicates shuffle, any non-broadcast
-    anti-join): AQE does not run inside streaming micro-batches, so
-    each batch's result-sized shuffles otherwise fan out to the full
-    configured width in almost-empty tasks.  Size it to the expected
-    per-batch result volume (the same reasoning as the streaming
-    entries' state-store partition scope); None leaves the session
-    conf untouched."""
+    result row for dedup across batches.  The in-batch plans run on the
+    stream's own clone of the session, at the shuffle width the session
+    had when the query started; setting the conf inside a batch does
+    not reach them."""
     reader = spark.readStream.format(fmt).schema(schema)
     for k, v in (options or {}).items():
         reader = reader.option(k, v)
     raw = reader.load(input_path)
 
     def push_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        old_parts = None
-        if batch_shuffle_partitions is not None:
-            old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-            spark.conf.set("spark.sql.shuffle.partitions",
-                           str(batch_shuffle_partitions))
-        try:
-            _push_batch(batch_df, epoch_id)
-        finally:
-            if old_parts is not None:
-                spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-
-    def _push_batch(batch_df: DataFrame, epoch_id: int) -> None:
         # persist the standing query's output for the batch's several
         # actions (bloom isEmpty probe, feed append's cache build,
         # non-bloom anti-join): each otherwise re-runs the batch input

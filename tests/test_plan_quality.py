@@ -804,6 +804,30 @@ class TestGlobalPlanLint:
         assert early.filter(F.col("session_id").isNotNull()).count() == 0
         assert early.count() > 0
 
+    @pytest.mark.parametrize("uri", [False, True], ids=["path", "file_uri"])
+    def test_read_evolving_sees_column_of_later_partition(self, spark,
+                                                          tmp_path, uri):
+        """The merged-schema memo must not pin a schema it cannot
+        fingerprint: a ``file://`` root lists as no files to the
+        driver-side walk, so a column a later partition adds has to
+        show on the next read, as it does for the plain path."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from datawave_spark.sources.parquet import read_evolving
+        store = tmp_path / "store"
+        (store / "d=1").mkdir(parents=True)
+        pq.write_table(pa.table({"id": [1], "name": ["a"]}),
+                       str(store / "d=1" / "part-0.parquet"))
+        root = f"file://{store}" if uri else str(store)
+        assert "extra" not in read_evolving(spark, root).columns
+        (store / "d=2").mkdir()
+        pq.write_table(pa.table({"id": [2], "name": ["b"], "extra": [7]}),
+                       str(store / "d=2" / "part-0.parquet"))
+        ev = read_evolving(spark, root)
+        assert "extra" in ev.columns
+        assert sorted((r.id, r.extra) for r in ev.collect()) == [
+            (1, None), (2, 7)]
+
 
 class TestSketchEntryPlans:
     def test_grouped_hll_register_merge_is_map_side(self, spark):

@@ -15,7 +15,10 @@ Three families (round-7 directive):
 - push delivery crash between the feed append and the ledger append:
   the retried epoch re-pushes that batch's rows (documented
   at-least-once bias — duplicates over losses) and the ledger stays
-  exactly-once.
+  exactly-once;
+- the session-scoped helpers (``util.persist_scoped``,
+  ``util.shuffle_width``) release what they hold: evicted cache slots,
+  and the session shuffle width on a raise.
 """
 
 import os
@@ -28,6 +31,7 @@ from datawave_spark.operators import text as text_mod
 from datawave_spark.operators.components import (
     connected_components, pagerank)
 from datawave_spark.operators.text import bpe_train
+from datawave_spark.util import persist_scoped, shuffle_width
 
 
 @pytest.fixture()
@@ -112,11 +116,14 @@ class TestMidRunCrashRetry:
                                                  tmp_path, monkeypatch):
         clean = _ranks(pagerank(edges, iters=6))
         _ckpt(spark, tmp_path, "prc")
+        width = spark.conf.get("spark.sql.shuffle.partitions")
         crash = _CrashAt(comp_mod.iter_checkpoint, 4)
         monkeypatch.setattr(comp_mod, "iter_checkpoint", crash)
         with pytest.raises(RuntimeError, match="injected"):
             pagerank(edges, iters=6, reliable=True)
         assert crash.calls == 4          # it really died mid-iteration
+        # the graph-sized width scope is released on the failure path
+        assert spark.conf.get("spark.sql.shuffle.partitions") == width
         monkeypatch.undo()
         # leftover checkpoint files from the dead run are still in the
         # dir — the retry must not read them
@@ -216,3 +223,77 @@ class TestPushCrashAtLeastOnce:
         q3.awaitTermination()
         assert sorted(r.k for r in
                       read_feed(spark, feed).collect()) == feed_keys
+
+
+def _cached(df):
+    lvl = df.storageLevel                # asks the session CacheManager
+    return lvl.useMemory or lvl.useDisk
+
+
+class TestPersistScoped:
+    @pytest.mark.parametrize("keep", [1, 2])
+    def test_fifo_evicts_different_plan_keeps_same_plan(self, spark, keep):
+        from datawave_spark import util
+        key = f"test.persist_scoped.keep{keep}"
+
+        def frame(i):
+            return spark.range(5).select(
+                (F.col("id") + F.lit(1000 * keep + i)).alias("v"))
+
+        try:
+            slots = [persist_scoped(frame(i), key, keep=keep)
+                     for i in range(keep)]
+            assert all(_cached(f) for f in slots)
+            # one more slot than `keep`: the oldest (a different plan)
+            # is unpersisted, the survivors stay cached
+            newest = persist_scoped(frame(keep), key, keep=keep)
+            assert not _cached(slots[0])
+            assert all(_cached(f) for f in slots[1:] + [newest])
+            # a rebuild of the slot about to be evicted has the same
+            # plan: evicting the old frame must not uncache the rebuild
+            rebuilt = persist_scoped(frame(1), key, keep=keep)
+            assert _cached(rebuilt)
+            assert rebuilt.collect() == frame(1).collect()
+        finally:
+            for f in util._PERSIST_SLOTS.pop(key, []):
+                f.unpersist()
+
+
+class TestShuffleWidth:
+    def test_conf_restored_when_body_raises(self, spark):
+        before = spark.conf.get("spark.sql.shuffle.partitions")
+        n = "3" if before != "3" else "2"
+        with pytest.raises(RuntimeError, match="body failed"):
+            with shuffle_width(spark, int(n)):
+                assert spark.conf.get("spark.sql.shuffle.partitions") == n
+                raise RuntimeError("body failed")
+        assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+    def test_stream_keeps_width_fixed_at_start(self, spark, tmp_path):
+        """A streaming query fixes its conf at start(): a stateful
+        stream started inside the scope runs its state stores at the
+        narrowed width after the session width is restored."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        src = tmp_path / "src"
+        src.mkdir()
+        pq.write_table(pa.table({"k": [1, 2, 1, 3]}),
+                       str(src / "part-0.parquet"))
+        before = spark.conf.get("spark.sql.shuffle.partitions")
+        n = 3 if before != "3" else 2
+        agg = (spark.readStream.schema("k long").parquet(str(src))
+               .groupBy("k").count())
+        with shuffle_width(spark, n):
+            q = (agg.writeStream.format("memory")
+                 .queryName("test_shuffle_width_stream")
+                 .outputMode("complete").trigger(availableNow=True)
+                 .start())
+        assert spark.conf.get("spark.sql.shuffle.partitions") == before
+        q.awaitTermination()
+        states = [op for p in q.recentProgress
+                  for op in p["stateOperators"]]
+        assert states and {op["numShufflePartitions"]
+                           for op in states} == {n}
+        got = {(r.k, r["count"]) for r in
+               spark.table("test_shuffle_width_stream").collect()}
+        assert got == {(1, 2), (2, 1), (3, 1)}
